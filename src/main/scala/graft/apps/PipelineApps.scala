@@ -7,6 +7,7 @@ import graft.pipelines._
 import graft.sources._
 import graft.sources.EnvelopeJson.FixturePages
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 
 /** Runnable pipeline applications (SURVEY.md §2h D1/D2): one Spark app per
   * reference DAG, composed as extract >> transform >> load inside a
@@ -17,7 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * for the HTTP fetchers — the PageSource seam is where a production HTTP
   * client plugs in. Sinks are parquet tables under `--out`, written with
   * dynamic partition overwrite on the run date so re-runs are idempotent
-  * (unlike the reference's blind JDBC appends).
+  * (unlike the reference's blind JDBC appends). An app's tables are loaded
+  * concurrently, one task per table (see [[load]]).
   */
 object PipelineApps {
 
@@ -33,14 +35,37 @@ object PipelineApps {
   }
 
   /** Load stage shared by all apps: each output frame becomes a partitioned
-    * parquet table keyed by the run date.
+    * parquet table keyed by the run date. The tables are written
+    * concurrently, one [[TaskGraph]] task per table on up to
+    * `defaultParallelism` threads: a single table's write leaves most cores
+    * idle between its jobs (driver-side planning and commit), and separate
+    * tables share nothing. Every write carries the caller's Spark local
+    * properties (see [[TaskGraph.runParallel]]). Table tasks never retry
+    * on their own: the app-level task owns the retry policy, and since
+    * each write replaces exactly its run-date partition, re-running the
+    * whole load is safe. Every write is joined before an error surfaces,
+    * so a retry never races its own in-flight writes; the first failed
+    * table in `outputs` order is rethrown with the other failures
+    * suppressed onto it.
     */
   def load(outputs: Map[String, DataFrame], outDir: String,
            runDate: java.time.LocalDate): Unit =
-    outputs.foreach { case (table, df) =>
-      Sinks.overwriteRunPartition(
-        df.withColumn("run_date", org.apache.spark.sql.functions.lit(runDate.toString)),
-        s"$outDir/$table", "run_date")
+    if (outputs.nonEmpty) {
+      val tasks = outputs.toSeq.map { case (table, df) =>
+        Task(table, policy = RetryPolicy(retries = 0))(() =>
+          Sinks.overwriteRunPartition(
+            df.withColumn("run_date", lit(runDate.toString)),
+            s"$outDir/$table", "run_date"))
+      }
+      val cores = outputs.head._2.sparkSession.sparkContext.defaultParallelism
+      val results = TaskGraph.runParallel(tasks, parallelism = math.min(tasks.size, cores))
+      val errors = tasks.map(t => results(t.id)).collect {
+        case TaskGraph.FailedAfterRetries(_, e) => e
+      }
+      errors.headOption.foreach { first =>
+        errors.tail.foreach(first.addSuppressed)
+        throw first
+      }
     }
 
   private def app(name: String)(body: (SparkSession, Args) => Unit): Array[String] => Unit =

@@ -54,7 +54,9 @@ object TaskGraph {
     * scheduling: each wave launches every currently-ready task and joins —
     * simple, deterministic result maps, and a Spark driver mostly WANTS
     * bounded submission concurrency (jobs from separate threads fill the
-    * scheduler's pools).
+    * scheduler's pools). The pool is made per call, so its threads are
+    * created by the caller and inherit its Spark local properties (job
+    * group, scheduler pool).
     */
   def runParallel(tasks: Seq[Task], parallelism: Int = 4,
                   sleep: Long => Unit = Thread.sleep): Map[String, TaskResult] = {

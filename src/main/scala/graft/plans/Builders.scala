@@ -36,9 +36,7 @@ object Builders {
 
   /** Literal array<string> argument, decoded to Scala strings. */
   def litStrings(name: String, what: String, e: Expression): Seq[String] =
-    litValue(name, what, e).asInstanceOf[ArrayData]
-      .toObjectArray(StringType)
-      .map(_.asInstanceOf[UTF8String].toString).toSeq
+    strings(name, what, litValue(name, what, e))
 
   /** Literal array<array<string>> argument, decoded to nested Scala
     * strings (the multi-word-set shape of graft_lang_id).
@@ -49,7 +47,12 @@ object Builders {
       .toObjectArray(org.apache.spark.sql.types.ArrayType(StringType))
       .map { inner =>
         require(inner != null, s"$name $what must not contain NULL sets")
-        inner.asInstanceOf[ArrayData].toObjectArray(StringType)
-          .map(_.asInstanceOf[UTF8String].toString).toSeq
+        strings(name, what, inner)
       }.toSeq
+
+  private def strings(name: String, what: String, v: Any): Seq[String] =
+    v.asInstanceOf[ArrayData].toObjectArray(StringType).map { s =>
+      require(s != null, s"$name $what must not contain NULL strings")
+      s.asInstanceOf[UTF8String].toString
+    }.toSeq
 }

@@ -46,6 +46,9 @@ case class LangIdLong(child: Expression, labels: Seq[String],
   require(labels.nonEmpty && labels.length == sets.length,
     s"${LangIdLong.Name} needs one word set per label " +
       s"(got ${labels.length} labels, ${sets.length} sets)")
+  // the matcher marks each word's sets in one Long bitmask
+  require(sets.length <= 64,
+    s"${LangIdLong.Name} takes at most 64 word sets (got ${sets.length})")
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -86,7 +89,6 @@ object LangIdLong {
     */
   final class MultiMatcher(labels: Seq[String], sets: Seq[Seq[String]])
       extends Serializable {
-    require(sets.length <= 64, "at most 64 word sets (bitmask)")
     private val out: Array[UTF8String] =
       labels.map(UTF8String.fromString).toArray
     private val nSets = sets.length

@@ -10,11 +10,15 @@ import org.apache.spark.sql.types.StructType
   * The fetch loop is driver-side by design: pagination has sequential stop
   * conditions (stop on empty page / on a period cutoff,
   * EIA930PipelineHourlyData.py:71-93), so pages arrive as a Seq of JSON
-  * bodies; parsing them is distributed (`from_json` + `explode` over a
-  * Dataset of page strings). Page counts are dozens at 5,000 rows/page —
-  * the distributed part is everything after the fetch. The PageSource
-  * abstraction keeps HTTP out of the engine: prod wires an HTTP client,
-  * tests wire fixture files.
+  * bodies. Parsing them is NOT distributed: the page strings are local
+  * data, so the optimizer folds `from_json` and the `response.data`
+  * extraction over them into a `LocalRelation` on the driver, once for
+  * every query that reads the parsed frame (60-85 ms per warm optimization
+  * of two 5,000-row pages on a 4-core host). Only the `explode` of the
+  * rows and the work after it run as Spark tasks. Each of an app's tables
+  * re-plans its pages; `PipelineApps.load` writes the tables concurrently,
+  * so those folds run in parallel. The PageSource abstraction keeps HTTP
+  * out of the engine: prod wires an HTTP client, tests wire fixture files.
   */
 object EnvelopeJson {
 
@@ -79,9 +83,10 @@ object EnvelopeJson {
     pages.result()
   }
 
-  /** Distributed envelope parse: pages -> one DataFrame of string-typed rows.
-    * Declared schema (no inference scan); backticked field access because
-    * the API uses hyphenated names.
+  /** Envelope parse: pages -> one DataFrame of string-typed rows, planned
+    * over a driver-side `LocalRelation` (see the object doc). Declared
+    * schema (no inference scan); backticked field access because the API
+    * uses hyphenated names.
     */
   def parsePages(spark: SparkSession, pages: Seq[String], row: StructType): DataFrame = {
     import spark.implicits._

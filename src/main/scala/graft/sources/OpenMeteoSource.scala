@@ -12,6 +12,13 @@ import org.apache.spark.sql.functions._
   * array-per-variable response becomes rows via one `posexplode` of the time
   * axis + positional `element_at` into each variable array — no shuffle,
   * scales linearly with (locations x hours).
+  *
+  * The bodies arrive as a driver-side Seq, so the parse is not
+  * distributed: the optimizer folds `from_json` over them into a
+  * `LocalRelation` on the driver, once for every query that reads the
+  * frame. The `posexplode` and `element_at` above it run as Spark tasks
+  * over that relation. The folds are part of each table's planning, which
+  * `PipelineApps.load` runs concurrently for an app's tables.
   */
 object OpenMeteoSource {
 
@@ -39,15 +46,4 @@ object OpenMeteoSource {
           col("latitude"), col("longitude")) ++
           vars.map(v => element_at(col(s"hourly.`$v`"), col("idx") + 1).as(v)): _*)
   }
-
-  /** F5 — hourly range generation from epoch-second bounds, end-EXCLUSIVE
-    * (`inclusive="left"`): sequence is inclusive on both ends, so the last
-    * step is pulled one interval back.
-    */
-  def hourlyRange(startEpochS: org.apache.spark.sql.Column,
-                  endEpochS: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sequence(
-      timestamp_seconds(startEpochS),
-      timestamp_seconds(endEpochS) - expr("INTERVAL 1 HOUR"),
-      expr("INTERVAL 1 HOUR"))
 }

@@ -26,6 +26,7 @@ class BuilderGuardSpec extends SparkSpec {
     BpeSegment.register(spark)
     UnigramSegment.register(spark)
     HtmlStrip.register(spark)
+    LangIdLong.register(spark)
   }
 
   /** The builder error may be wrapped (AnalysisException chains); assert
@@ -100,11 +101,34 @@ class BuilderGuardSpec extends SparkSpec {
     CountMinSketch.Name ->
       "SELECT graft_count_min(1L, CAST(NULL AS int), 3)",
     GraftFunctions.MisraGriesName ->
-      "SELECT graft_misra_gries(1L, CAST(NULL AS int))")
+      "SELECT graft_misra_gries(1L, CAST(NULL AS int))",
+    LangIdLong.Name ->
+      "SELECT graft_lang_id('the', array('en'), array(array('the', NULL)))")
 
   nullLiteral.zipWithIndex.foreach { case ((name, sql), i) =>
     test(s"$name rejects NULL literal argument with a named error ($i)") {
       assertNamedError(name, sql)
     }
+  }
+
+  test(s"${LangIdLong.Name} rejects more than 64 word sets at plan time") {
+    registerAll()
+    // n one-word sets: label li for the set {wi}
+    def langIdSql(n: Int): String = {
+      val labels = (0 until n).map(i => s"'l$i'").mkString(", ")
+      val sets = (0 until n).map(i => s"array('w$i')").mkString(", ")
+      s"SELECT graft_lang_id('w1', array($labels), array($sets))"
+    }
+    // spark.sql analyzes eagerly, so the builder fails before any eval
+    val t = intercept[Throwable](spark.sql(langIdSql(65)))
+    val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(e => Option(e.getMessage).exists(m =>
+      m.contains(LangIdLong.Name) && m.contains("at most 64 word sets"))),
+      s"got ${chain.map(_.getMessage)}")
+    val e = intercept[IllegalArgumentException](LangIdLong(
+      org.apache.spark.sql.catalyst.expressions.Literal("w1"),
+      (0 until 65).map(i => s"l$i"), (0 until 65).map(i => Seq(s"w$i"))))
+    assert(e.getMessage.contains("at most 64 word sets"))
+    assert(spark.sql(langIdSql(64)).head().getString(0) == "l1")
   }
 }
